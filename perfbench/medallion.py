@@ -7,8 +7,9 @@ file's freshness: landing to Gold having merged it.
 
 Everything is driven through the program's public functions
 (``generator``, ``sources``, ``pipeline``, ``sinks``, ``session``); the
-per-layer numbers come from Spark's ``StreamingQuery.recentProgress`` and
-from wrapping ``sinks.merge_upsert_parquet`` from outside.
+per-layer numbers come from Spark's ``StreamingQuery.recentProgress``,
+from wrapping ``sinks.merge_upsert_parquet`` from outside and, on a traced
+run, from the query-registry keys of ``batchkeys``.
 """
 
 from __future__ import annotations
@@ -32,11 +33,17 @@ from real_time_rides_data_pipeline_spark.schemas import BRONZE_SCHEMA
 from real_time_rides_data_pipeline_spark.session import get_spark
 from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
+import batchkeys
 import procstat
 
 EVENTS_PER_FILE = 1000
 N_DRIVERS = 100  # the reference producer's default
-SETUP_REPS = 3
+SETUP_REPS = 2
+#: Untimed steps before the timed loop: the first step after set-up runs
+#: slowest while the JVM's JIT and Spark's code caches warm up. Step time
+#: keeps falling for about eight steps (on 4 vCPUs, from ~4.4 s to ~2.7 s),
+#: but more untimed steps do not fit the run budget (DESIGN.md).
+PREROLL_STEPS = 1
 #: Wide enough that no generated event is late, so the stream must equal
 #: the batch plan (as in the streaming tests).
 WATERMARK = "2 hours"
@@ -209,12 +216,11 @@ def _stage_inputs(root: str, seed: int, n_files: int) -> tuple[list[str], list[i
     return paths, sizes
 
 
-def set_up(root: str, seed: int, cpus: int, n_files: int, history: bool,
-           conf: dict) -> Stack:
+def set_up(root: str, seed: int, n_files: int, history: bool, conf: dict) -> Stack:
     """Session start, input staging, Gold target preparation and warm-up
     (starting both queries and draining staged file 0), each timed."""
     t0 = time.perf_counter()
-    spark = get_spark(app_name="perfbench", cpus=cpus, extra_conf=conf)
+    spark = get_spark(app_name="perfbench", extra_conf=conf)
     t1 = time.perf_counter()
     staged, sizes = _stage_inputs(root, seed, n_files)
     stack = Stack(spark, root, staged, sizes)
@@ -377,14 +383,21 @@ def trace_metrics(stack: Stack, steps: list[tuple], first_batch: tuple[int, int]
     return out
 
 
-def run(workload: str, seed: int, seconds: float, trace: bool, cpus: int,
-        workdir: str, conf: dict) -> dict:
-    """Set up ``SETUP_REPS`` times (each in a fresh session), measure on the
-    last set-up, check the outputs; returns the result record."""
+def run(workload: str, seed: int, seconds: float, trace: bool, workdir: str,
+        conf: dict) -> dict:
+    """Launch the JVM (untimed), set up ``SETUP_REPS`` times, each in a
+    fresh session, measure on the last set-up and check the outputs; a
+    traced run then also runs the registry keys. Returns the raw metric
+    values, the check failures, the op count and diagnostics."""
     history = WORKLOADS[workload]
     # Enough staged files that the loop never runs dry at a fast step time.
-    n_files = 2 + int(seconds / 0.75) + 1
+    n_files = 1 + PREROLL_STEPS + int(seconds / 0.75) + 1
     merges = MergeTrace() if trace else None
+    # The JVM's own start-up is Spark's cost, not the program's, and varies
+    # most with host load, so it stays out of setup_s.
+    t0 = time.perf_counter()
+    get_spark(app_name="perfbench", extra_conf=conf).stop()
+    jvm_s = time.perf_counter() - t0
     setups, stack = [], None
     try:
         for rep in range(SETUP_REPS):
@@ -396,9 +409,20 @@ def run(workload: str, seed: int, seconds: float, trace: bool, cpus: int,
             root = os.path.join(workdir, f"setup{rep}")
             os.makedirs(root)
             t0 = time.perf_counter()
-            stack = set_up(root, seed, cpus, n_files, history, conf)
+            stack = set_up(root, seed, n_files, history, conf)
             setups.append((time.perf_counter() - t0, stack.phases))
-        return _measure(stack, seconds, history, setups, merges)
+        result = _measure(stack, seconds, history, setups, merges)
+        result["diag"]["jvm_s"] = round(jvm_s, 3)
+        if trace:
+            result["metrics"]["setup.jvm_s"] = jvm_s
+            stack.stop()
+            keys, errors = batchkeys.measure(stack.spark, workdir, seed)
+            result["metrics"].update(keys)
+            result["errors"] += errors
+            result["attempted"] += len(batchkeys.KEYS)
+        # A failed check counts every op of the run as failed.
+        result["failed"] = result["attempted"] if result["errors"] else 0
+        return result
     finally:
         if merges is not None:
             merges.restore()
@@ -410,11 +434,10 @@ def _measure(stack: Stack, seconds: float, history: bool, setups: list,
              merges: MergeTrace | None) -> dict:
     """Pre-roll, timed loop, checks. ``merges`` is given on a traced run,
     which reports the per-layer metrics instead of the end-to-end ones."""
-    # Pre-roll: the first step after set-up ran 1.5-2x slower than the rest
-    # (JIT and GC still settling), so staged file 1 is landed and checked
-    # but not timed.
-    stack.step(1)
-    first = 2
+    # Staged file 0 was drained by the set-up.
+    first = 1 + PREROLL_STEPS
+    for i in range(1, first):
+        stack.step(i)
     first_batch = (
         stack.silver.lastProgress["batchId"] + 1,
         stack.gold.lastProgress["batchId"] + 1,
@@ -458,10 +481,8 @@ def _measure(stack: Stack, seconds: float, history: bool, setups: list,
         layer.update({f"traced.{k}": v for k, v in metrics.items()})
         metrics = layer
     return {
-        "correct": not errors,
         "errors": errors,
         "attempted": len(steps),
-        "failed": len(steps) if errors else 0,
         "diag": {
             "freshness_s": [round(f, 3) for f in fresh],
             "setups": [
@@ -473,17 +494,9 @@ def _measure(stack: Stack, seconds: float, history: bool, setups: list,
                 (steal1[0] - steal0[0]) / max(1, steal1[1] - steal0[1]), 4
             ),
         },
-        "metrics": {k: {"value": v, "unit": _unit(k)} for k, v in metrics.items()},
+        "metrics": metrics,
     }
 
 
 def _parquet_files(path: str) -> int:
     return sum(1 for n in os.listdir(path) if n.endswith(".parquet"))
-
-
-def _unit(name: str) -> str:
-    for suffix, unit in (("per_s", "1/s"), ("_ms", "ms"), ("_s", "s"),
-                         ("_mb", "MB"), ("_bytes", "bytes")):
-        if name.endswith(suffix):
-            return unit
-    return "count"

@@ -14,6 +14,7 @@ import threading
 
 _TICK = os.sysconf("SC_CLK_TCK")
 _PAGE = os.sysconf("SC_PAGE_SIZE")
+_RSS_INTERVAL_S = 0.25
 
 
 def _stat_fields(pid: str) -> list[str] | None:
@@ -41,10 +42,10 @@ def _tree(root: int) -> list[str]:
     return out
 
 
-def tree_cpu_s(root: int | None = None) -> float:
+def tree_cpu_s() -> float:
     """User + system CPU-seconds of the tree, reaped children included."""
     total = 0
-    for pid in _tree(root or os.getpid()):
+    for pid in _tree(os.getpid()):
         fields = _stat_fields(pid)
         if fields is not None:
             # utime, stime, cutime, cstime are stat fields 14-17.
@@ -60,9 +61,9 @@ def host_steal() -> tuple[int, int]:
     return ticks[7], sum(ticks)
 
 
-def tree_rss_bytes(root: int | None = None) -> int:
+def tree_rss_bytes() -> int:
     total = 0
-    for pid in _tree(root or os.getpid()):
+    for pid in _tree(os.getpid()):
         try:
             with open(f"/proc/{pid}/statm") as f:
                 total += int(f.read().split()[1]) * _PAGE
@@ -72,11 +73,11 @@ def tree_rss_bytes(root: int | None = None) -> int:
 
 
 class PeakRss:
-    """Samples the tree's summed RSS on a background thread; ``peak`` is
-    the largest sample, taken at least once at start and once at stop."""
+    """Samples the tree's summed RSS every 0.25 s on a background thread;
+    ``peak`` is the largest sample, taken at least once at start and once
+    at stop."""
 
-    def __init__(self, interval_s: float = 0.25):
-        self.interval_s = interval_s
+    def __init__(self):
         self.peak = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
@@ -85,7 +86,7 @@ class PeakRss:
         self.peak = max(self.peak, tree_rss_bytes())
 
     def _run(self) -> None:
-        while not self._stop.wait(self.interval_s):
+        while not self._stop.wait(_RSS_INTERVAL_S):
             self._sample()
 
     def __enter__(self) -> PeakRss:

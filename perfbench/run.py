@@ -1,15 +1,16 @@
 """Benchmark entry point for the streaming medallion.
 
     python3 perfbench/run.py --workload medallion_steady --seed 1 \
-        --seconds 8 --trace 0 [--cpus N]
+        --seconds 10 --trace 0
 
 Run from the repository root. Builds a Spark session on
-``local[$SPARK_GRAFT_CPUS]`` (default: the machine's core count) with a
-2 GiB driver heap, runs the workload, checks the outputs, and prints one
-JSON line last:
-``{"correct", "attempted", "failed", "metrics"}``. ``--trace 0`` reports
-the end-to-end metrics, ``--trace 1`` the per-layer ones. Every file the
-run writes lives under ``.perfbench_work/`` and is removed at exit.
+``local[$SPARK_GRAFT_CPUS]`` (default: the machine's core count;
+``SPARK_GRAFT_CPUS=1`` gives the single-threaded baseline) with a 2 GiB
+driver heap, runs the workload, checks the outputs, and prints one JSON
+line last: ``{"correct", "attempted", "failed", "metrics"}``. ``--trace 0``
+reports the end-to-end metrics, ``--trace 1`` the per-layer ones, each
+with the unit ``BENCHMARK.json`` declares for it. Every file the run
+writes lives under ``.perfbench_work/`` and is removed at exit.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ import json
 import os
 import shutil
 import sys
+import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -34,6 +36,10 @@ def _isolate(workdir: str) -> dict:
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(workdir, "local")
     os.environ["SPARK_DRIVER_MEMORY"] = "2g"
     os.environ["PYSPARK_PYTHON"] = sys.executable
+    # Spark hands timestamps to Python in the local zone; the output checks
+    # compare them with DuckDB's UTC-naive values.
+    os.environ["TZ"] = "UTC"
+    time.tzset()
     import tempfile
 
     tempfile.tempdir = tmp
@@ -58,18 +64,20 @@ def _shutdown_jvm() -> None:
         proc.wait(timeout=60)
 
 
+def _declared_units(trace: bool) -> dict[str, str]:
+    """Metric name -> unit, as ``BENCHMARK.json`` declares them for the
+    end-to-end (``trace`` false) or per-layer metrics."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    return {m["name"]: m["unit"] for m in spec["per_layer" if trace else "end_to_end"]}
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument(
-        "--cpus",
-        type=int,
-        default=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()),
-        help="local[N] cores (1 gives the single-threaded baseline)",
-    )
     args = ap.parse_args()
 
     sys.path.insert(0, ROOT)
@@ -84,6 +92,7 @@ def main() -> int:
     if args.workload not in medallion.WORKLOADS:
         print(f"unknown workload {args.workload!r}", file=sys.stderr)
         return 2
+    units = _declared_units(bool(args.trace))
 
     workdir = os.path.join(ROOT, ".perfbench_work", f"run-{os.getpid()}")
     os.makedirs(workdir)
@@ -92,7 +101,7 @@ def main() -> int:
         try:
             result = medallion.run(
                 args.workload, args.seed, args.seconds, bool(args.trace),
-                args.cpus, workdir, conf,
+                workdir, conf,
             )
         finally:
             from pyspark.sql import SparkSession
@@ -105,10 +114,24 @@ def main() -> int:
         shutil.rmtree(workdir, ignore_errors=True)
         with contextlib.suppress(OSError):  # other runs may still use it
             os.rmdir(os.path.dirname(workdir))
-    for err in result.pop("errors"):
+    errors = result.pop("errors")
+    for err in errors:
         print(f"CHECK FAILED: {err}", file=sys.stderr)
     print(f"diagnostics: {json.dumps(result.pop('diag'))}", file=sys.stderr)
-    print(json.dumps(result))
+    metrics = result.pop("metrics")
+    if set(metrics) != set(units):
+        print(
+            "measured metrics differ from BENCHMARK.json: "
+            f"undeclared {sorted(set(metrics) - set(units))}, "
+            f"missing {sorted(set(units) - set(metrics))}",
+            file=sys.stderr,
+        )
+        return 1
+    print(json.dumps({
+        "correct": not errors,
+        **result,
+        "metrics": {k: {"value": metrics[k], "unit": u} for k, u in units.items()},
+    }))
     return 0
 
 
