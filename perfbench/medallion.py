@@ -39,11 +39,12 @@ import procstat
 EVENTS_PER_FILE = 1000
 N_DRIVERS = 100  # the reference producer's default
 SETUP_REPS = 2
-#: Untimed steps before the timed loop: the first step after set-up runs
-#: slowest while the JVM's JIT and Spark's code caches warm up. Step time
-#: keeps falling for about eight steps (on 4 vCPUs, from ~4.4 s to ~2.7 s),
-#: but more untimed steps do not fit the run budget (DESIGN.md).
-PREROLL_STEPS = 1
+#: Untimed steps before the timed loop: the first steps after set-up run
+#: slowest while the JVM's JIT and Spark's code caches warm up (on 4 vCPUs
+#: the first is ~15 % above the later ones, the second ~7 %). Step time keeps
+#: drifting down slowly for a dozen more steps; those do not fit the run
+#: budget (DESIGN.md).
+PREROLL_STEPS = 2
 #: Wide enough that no generated event is late, so the stream must equal
 #: the batch plan (as in the streaming tests).
 WATERMARK = "2 hours"

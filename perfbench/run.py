@@ -1,7 +1,7 @@
 """Benchmark entry point for the streaming medallion.
 
     python3 perfbench/run.py --workload medallion_steady --seed 1 \
-        --seconds 10 --trace 0
+        --seconds 15 --trace 0
 
 Run from the repository root. Builds a Spark session on
 ``local[$SPARK_GRAFT_CPUS]`` (default: the machine's core count;
